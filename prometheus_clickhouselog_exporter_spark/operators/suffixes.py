@@ -85,9 +85,13 @@ def suffix_lcp_unbounded(
 
     SINGLE-CONSUMPTION CONTRACT (ADVICE r13 #4): the returned adjacency
     frame is NOT checkpointed — a consumer that triggers it more than
-    once re-runs the O(n·cap) certified sort each time. The sole caller
-    (llmdata13) consumes it linearly; add ``.localCheckpoint(eager=False)``
-    at the call site if a multi-action consumer ever appears.
+    once re-runs the O(n·cap) certified sort each time. Its callers are
+    ``llmdata18.dedup_longest_substring_unbounded`` and
+    ``suffix_lcp_auto`` (doubling branch, consumed by
+    ``llmdata22.dedup_longest_substring_auto``); ``tests/test_llmdata13.py``
+    checks it against brute force. All consume it linearly; add
+    ``.localCheckpoint(eager=False)`` at the call site if a multi-action
+    consumer ever appears.
     """
     tokens = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit(""))
     # Checkpoint the token ARRAYS once per doc and the slim per-position

@@ -72,39 +72,40 @@ class PrometheusSnapshotSink:
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """Merge one micro-batch of session/obs/err rows into the snapshot.
 
-        All heavy lifting stays distributed: per-batch conditional
-        aggregates reduce the batch to O(labels × buckets) rows first.
+        One grouped conditional aggregate reduces the batch to a few rows
+        per (row_type, label) — label counts plus every histogram's bucket
+        sums, count and sum, each over its own row_type — and one
+        ``collect()`` brings them to the driver, which routes each row by
+        ``row_type``. A batch thus costs one aggregate, plus the parquet
+        append when sessions are published. Every extra action re-runs the
+        state fold upstream of ``batch_df``, so the batch is cached only
+        when a parquet append may follow; otherwise the cache would cost a
+        copy of the batch for its single reader.
         """
-        batch_df = batch_df.cache()
+        row_type = F.col("row_type")
+        aggs = [F.count(F.lit(1)).alias("n")]
+        for name, (col, buckets, rt, _) in _HISTOGRAMS.items():
+            v = F.when(row_type == rt, F.col(col)).cast("double")
+            aggs += [
+                F.sum(F.when(v <= F.lit(float(b)), 1).otherwise(0)).alias(f"{name}_b{i}")
+                for i, b in enumerate(buckets)
+            ]
+            aggs += [F.count(v).alias(f"{name}_cnt"), F.sum(v).alias(f"{name}_s")]
+        if self.session_parquet_path:
+            batch_df = batch_df.cache()
         try:
-            errs = (
-                batch_df.filter(F.col("row_type") == "err")
-                .groupBy("err_type").agg(F.count(F.lit(1)).alias("n")).collect()
+            rows = (
+                batch_df.groupBy(
+                    row_type, "err_type", "obs_label",
+                    F.when(row_type == "obs_error", F.col("error_code")).alias("error_code"),
+                )
+                .agg(*aggs)
+                .collect()
             )
-            inis = (
-                batch_df.filter(F.col("row_type") == "obs_initial")
-                .groupBy("obs_label").agg(F.count(F.lit(1)).alias("n")).collect()
-            )
-            qerrs = (
-                batch_df.filter(F.col("row_type") == "obs_error")
-                .groupBy("obs_label", "error_code").agg(F.count(F.lit(1)).alias("n")).collect()
-            )
-            hists = {}
-            for name, (col, buckets, row_type, labelled) in _HISTOGRAMS.items():
-                src = batch_df.filter(F.col("row_type") == row_type)
-                label = F.col("obs_label") if labelled else F.lit("")
-                v = F.col(col).cast("double")
-                aggs = [
-                    F.sum(F.when(v <= F.lit(float(b)), 1).otherwise(0)).alias(f"b{i}")
-                    for i, b in enumerate(buckets)
-                ]
-                aggs += [F.count(v).alias("cnt"), F.sum(v).alias("s")]
-                hists[name] = src.groupBy(label.alias("label")).agg(*aggs).collect()
-            n_sessions = batch_df.filter(F.col("row_type") == "session").count()
-            n_timeouts = batch_df.filter(F.col("row_type") == "timeout_evict").count()
+            n_sessions = sum(r["n"] for r in rows if r["row_type"] == "session")
             if self.session_parquet_path and n_sessions:
                 (
-                    batch_df.filter(F.col("row_type") == "session")
+                    batch_df.filter(row_type == "session")
                     .drop("row_type", "err_type", "obs_label")
                     .write.mode("append")
                     .parquet(self.session_parquet_path)
@@ -113,22 +114,27 @@ class PrometheusSnapshotSink:
             batch_df.unpersist()
 
         with self._lock:
-            for r in errs:
-                self.exporter_errors[r["err_type"]] += r["n"]
-            for r in inis:
-                self.query_count[r["obs_label"]] += r["n"]
-            for r in qerrs:
-                self.query_errors[(r["obs_label"], str(r["error_code"]))] += r["n"]
-            for name, rows in hists.items():
-                _, buckets, _, _ = _HISTOGRAMS[name]
-                for r in rows:
-                    h = self.histograms[name].setdefault(r["label"], _Hist(buckets))
+            for r in rows:
+                kind = r["row_type"]
+                if kind == "err":
+                    self.exporter_errors[r["err_type"]] += r["n"]
+                elif kind == "obs_initial":
+                    self.query_count[r["obs_label"]] += r["n"]
+                elif kind == "obs_error":
+                    self.query_errors[(r["obs_label"], str(r["error_code"]))] += r["n"]
+                elif kind == "session":
+                    self.sessions += r["n"]
+                elif kind == "timeout_evict":
+                    self.timeouts += r["n"]
+                for name, (_, buckets, rt, labelled) in _HISTOGRAMS.items():
+                    if kind != rt:
+                        continue
+                    label = r["obs_label"] if labelled else ""
+                    h = self.histograms[name].setdefault(label, _Hist(buckets))
                     for i, b in enumerate(h.buckets):
-                        h.counts[b] += r[f"b{i}"] or 0
-                    h.total += r["cnt"]
-                    h.sum += r["s"] or 0.0
-            self.sessions += n_sessions
-            self.timeouts += n_timeouts
+                        h.counts[b] += r[f"{name}_b{i}"]
+                    h.total += r[f"{name}_cnt"]
+                    h.sum += r[f"{name}_s"] or 0.0
 
     def count_lines_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """A1 read_lines (main.go:119): counts raw source lines per batch."""

@@ -499,7 +499,8 @@ _ICWS_DOCS = 200_000
 # each query 3× (warm-up + 2 timed passes), leaking ~n_docs·|V|·8 bytes
 # per build for the session lifetime. One broadcast per corpus, same
 # invalidation discipline as the ANN _TRAIN_CACHE (file provenance in the
-# key catches in-place rewrites of the source parquet).
+# key catches in-place rewrites of the source parquet). The applicationId
+# in the key keeps a broadcast from a stopped SparkContext from being reused.
 _DENSE_BC: dict[tuple, object] = {}
 
 
@@ -669,7 +670,7 @@ def dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         from .core import corpus_key
 
-        bk = corpus_key(sf_dir, "documents")
+        bk = (spark.sparkContext.applicationId, corpus_key(sf_dir, "documents"))
         bc = _DENSE_BC.get(bk)
         if bc is None:
             rows = prof.select("doc_id", "v", "t").collect()

@@ -11,6 +11,9 @@ from datetime import datetime, timedelta
 
 import pytest
 
+from prometheus_clickhouselog_exporter_spark.operators.correlate import enrich_parsed
+from prometheus_clickhouselog_exporter_spark.operators.metrics import metric_snapshot
+from prometheus_clickhouselog_exporter_spark.operators.parsing import parse_log_lines
 from prometheus_clickhouselog_exporter_spark.sources.fixtures import (
     FixtureLog,
     initial_line,
@@ -18,10 +21,12 @@ from prometheus_clickhouselog_exporter_spark.sources.fixtures import (
     standard_corpus,
     stats_line,
 )
+from prometheus_clickhouselog_exporter_spark.sources.logsource import read_log_batch, read_log_stream
 from prometheus_clickhouselog_exporter_spark.streaming import (
     PrometheusSnapshotSink,
     run_log_pipeline,
 )
+from prometheus_clickhouselog_exporter_spark.streaming.session_state import sessionize_stream
 
 T = datetime(2024, 3, 1, 9, 0, 0)
 
@@ -161,3 +166,72 @@ def test_rocksdb_state_store_provider(spark, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+@pytest.fixture(scope="module")
+def session_rows(spark, tmp_path_factory):
+    """The standard corpus through the sessionizer, drained into a memory
+    table: the rows ``process_batch`` sees for one micro-batch, as a static
+    frame whose state fold is already done, so only the sink's own jobs
+    run on it. (applyInPandasWithState runs on streaming inputs only.)"""
+    log_dir = tmp_path_factory.mktemp("sink_logs")
+    standard_corpus().write(str(log_dir / "00.log"))
+    raw = read_log_stream(spark, str(log_dir))
+    q = (
+        sessionize_stream(enrich_parsed(parse_log_lines(raw)))
+        .writeStream.format("memory").queryName("sink_session_rows")
+        .option("checkpointLocation", str(tmp_path_factory.mktemp("sink_ckpt")))
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    return spark.table("sink_session_rows")
+
+
+def _jobs_in(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_process_batch_job_count(spark, session_rows, tmp_path):
+    """One aggregate and one collect per micro-batch (plus the parquet
+    append when a sink path is set) — not one action per collector.
+
+    AQE is off here as it is inside a micro-batch of the stateful
+    sessions query (Spark disables it there); on a static frame it would
+    add a map-stage job per shuffle and per cached plan."""
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        plain = PrometheusSnapshotSink()
+        assert _jobs_in(spark, "sink-plain", lambda: plain.process_batch(session_rows, 0)) <= 2
+        published = PrometheusSnapshotSink(session_parquet_path=str(tmp_path / "sessions"))
+        assert _jobs_in(spark, "sink-parquet", lambda: published.process_batch(session_rows, 0)) <= 3
+    finally:
+        spark.conf.set(key, prev)
+    assert published.sessions == plain.sessions == 13
+    assert spark.read.parquet(str(tmp_path / "sessions")).count() == 13
+
+
+def test_process_batch_matches_batch_snapshot(spark, session_rows, fixture_log):
+    """Bucket-level cross-check of the stream sink against the batch sink:
+    the same corpus renders the same exposition, line for line. Only
+    read_lines differs — the stream counts it in a separate query."""
+    stream = PrometheusSnapshotSink()
+    stream.process_batch(session_rows, 0)
+    raw = read_log_batch(spark, fixture_log)
+    batch = PrometheusSnapshotSink()
+    batch.load_metric_frames(metric_snapshot(raw, parse_log_lines(raw)))
+
+    def lines(sink):
+        return [
+            ln for ln in sink.render_exposition().splitlines()
+            if not ln.startswith("chlogexporter_read_lines ")
+        ]
+
+    assert lines(stream) == lines(batch)
